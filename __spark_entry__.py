@@ -137,7 +137,7 @@ PRIORITY = [
     "k_ols_multifeature", "k_user_entropy", "k_dedup_lines", "k_loop_detect",
     "k_instruction_mine", "k_gate_cascade_order", "k_dup_weighted_sampling", "k_ivf_probe_sweep",
     "k_embed_isotropy", "k_eval_recall_curve", "i_stream_topk",
-    "j_udtf_table_arg", "k_uplift_qini", "k_feature_woe", 
+    "j_udtf_table_arg", "k_uplift_qini", "k_feature_woe",
     "k_reid_risk", "k_shuffle_quality", "k_eval_pass_at_k", "k_fleiss_kappa",
     "q_tpch_refresh", "k_dedup_jaccard_histogram", "c_join_er_blocking", "k_forecast_snaive",
     "k_markov_stationary", "k_sim_tfidf_pairs", "k_design_effect",

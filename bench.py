@@ -19,15 +19,14 @@ JVM startup would dominate at sf0.1).
 
 from __future__ import annotations
 
-import inspect
 import json
 import os
-import re
 import sys
 import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from data_service_spark.io import MEMOS
 from data_service_spark.registry import QUERIES, load_all
 from data_service_spark.session import get_spark
 
@@ -171,73 +170,22 @@ def main() -> None:
         .mode("overwrite")
         .save()
     )
-    # Warm the session-scope memoized shared intermediates (5-gram shingle
-    # hashes, CC labels, centroid assignment) OUTSIDE the timed region:
+    # Warm every session memo (io.MEMOS: 5-gram shingle hashes, CC
+    # labels, centroid assignment, ...) OUTSIDE the timed region:
     # whichever consumer key happens to run first would otherwise absorb
     # the whole shared chain's cost — a run-order artifact, not that key's
     # price (this is what made k_text_contamination read 12 s in r02 while
     # its steady state is ~2 s). A production pipeline materializes these
-    # once per corpus; the bench mirrors that.
-    from data_service_spark.queries.inference import (  # noqa: PLC0415
-        _perm_pvals_df,
-    )
-    from data_service_spark.queries.llm import (  # noqa: PLC0415
-        _exploded_shingle_hashes,
-        _cs_pairs,
-        _exact_ranked,
-        _minhash_pairs,
-        _minhash_sigs,
-        _near_pairs,
-        _signrp_buckets,
-        _sim_pairs_warm_03,
-        _sim_pairs_warm_04,
-        k_cluster_assign,
-        k_dedup_clusters,
-    )
-    from data_service_spark.queries.corpus_stats import (  # noqa: PLC0415
-        _bigram_counts,
-        _unigram_counts,
-    )
-    from data_service_spark.queries.llm_text import (  # noqa: PLC0415
-        _ff_feats_df,
-        _simhash_fp,
-        k_text_bm25,
-    )
-
-    # a_sink_hive_table's child-JVM Derby bring-up (~15 s) is likewise a
-    # session fixed cost behind a per-(session, corpus) memo — prime it here
-    # so the timed pass measures the handoff re-read, not the JVM spawn
-    # (r05 verdict item #6: it cost the driver 16.8 s cold every round).
-    from data_service_spark.queries.scans import a_sink_hive_table  # noqa: PLC0415
-
+    # once per corpus; the bench mirrors that. Subset runs still pay the
+    # (cheap, ~1-2 s total) memo warms even when no requested key consumes
+    # them. The one exception is a_sink_hive_table: its memo spawns a
+    # ~15 s Derby child JVM, only worth paying when the timed pass will
+    # hit the hive key (always true on a full run, rarely on a subset).
     warm_fns = [
-        _exploded_shingle_hashes,
-        _minhash_sigs,
-        _cs_pairs,
-        _unigram_counts,
-        _bigram_counts,
-        _exact_ranked,
-        _ff_feats_df,
-        _simhash_fp,
-        k_text_bm25,
-        _minhash_pairs,
-        _near_pairs,
-        _signrp_buckets,
-        _sim_pairs_warm_03,
-        _sim_pairs_warm_04,
-        _perm_pvals_df,
-        k_cluster_assign,
-        k_dedup_clusters,
+        m
+        for m in MEMOS
+        if m.__name__ != "a_sink_hive_table" or not only or m.__name__ in keys
     ]
-    # Deliberate: subset runs still pay the (cheap, ~1-2 s total) memo
-    # warms above even when no requested key consumes them — a correct
-    # steady-state number for any memo consumer matters more than the
-    # warm cost, and a consumer map would rot. The one exception is the
-    # hive warm: it spawns a ~15 s Derby child JVM, only worth paying
-    # when the timed pass will actually hit the hive key (always true on
-    # a full run, rarely on a subset iteration loop).
-    if not only or "a_sink_hive_table" in keys:
-        warm_fns.append(a_sink_hive_table)
     # VERDICT r13 #2: the memo builds run untimed here, so consumer keys'
     # timed numbers are memo READS. Report the total build seconds as
     # memo_build_sec so wallclock_all_queries + memo_build_sec is the
@@ -253,7 +201,14 @@ def main() -> None:
 
     timings: dict[str, float] = {}
     failures: dict[str, str] = {}
+    # Keys whose timed number is a memo READ, not the query: total memo
+    # hits grew during the key's first timed run (every memo is warm by
+    # now, so a memo call there is a hit). History readers need this to
+    # tell warm-path step-changes from real wins across the memoization
+    # regime changes (ADVICE r07).
+    memo_backed: list[str] = []
     for key in keys:
+        hits0 = sum(m.hits for m in MEMOS)
         t0 = time.perf_counter()
         try:
             QUERIES[key](spark, sf_dir).write.format("noop").mode(
@@ -262,6 +217,8 @@ def main() -> None:
             timings[key] = round(time.perf_counter() - t0, 3)
         except Exception as exc:  # one bad key must not sink the whole run
             failures[key] = f"{type(exc).__name__}: {exc}"[:200]
+        if sum(m.hits for m in MEMOS) > hits0:
+            memo_backed.append(key)
 
     # Steady-state pass: single-shot numbers on a 32-thread shared host
     # carry ambient-contention outliers (BASELINE.md documents 5× key-level
@@ -378,35 +335,6 @@ def main() -> None:
 
     total = round(sum(timings.values()), 3)
     sf_val = float(sf) if sf.replace(".", "").isdigit() else sf
-    # Flag keys whose timed number is a memo/checkpoint READ, not the
-    # query: the key's own result is session-memoized (corpus_memo
-    # `_cache`, or an expanded-form `*_CACHE.get` body) or its body
-    # directly returns one of the pre-warmed memo helpers. History
-    # readers need this to tell warm-path step-changes from real wins
-    # across the memoization regime changes (ADVICE r07). Detected from
-    # source, not hand-curated, so new memos self-report.
-    warm_names = {fn.__name__ for fn in warm_fns}
-    memo_backed: list[str] = []
-    for key, fn in QUERIES.items():
-        try:
-            src = inspect.getsource(fn)
-        except (OSError, TypeError):
-            continue
-        direct = any(
-            re.search(rf"return {re.escape(n)}\(spark", src)
-            for n in warm_names
-        )
-        # sim_pairs is the r13 session-memoized candidate-graph entry
-        # point (threshold-keyed, so its warm wrappers carry different
-        # names); any key calling it consumes a pre-warmed memo.
-        if (
-            hasattr(fn, "_cache")
-            or "_CACHE.get(" in src
-            or re.search(r"\bsim_pairs\(spark", src)
-            or direct
-        ):
-            memo_backed.append(key)
-    memo_backed.sort()
     full = {
         "metric": "wallclock_all_queries",
         "value": total,

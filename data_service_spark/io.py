@@ -39,17 +39,10 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
-def evict_stale(cache: dict, ck: tuple) -> None:
-    """Drop memo entries whose session component differs from ``ck[0]``.
-
-    Every per-(session, corpus) memo in this repo keys on
-    ``(session_key(spark), sf_dir)``; entries from a stopped session are
-    never served again (the applicationId changed) but would otherwise pin
-    checkpointed-DataFrame handles forever in a session-restarting
-    process. Calling this on each miss keeps at most one session's
-    entries alive per cache."""
-    for stale in [k for k in cache if k[0] != ck[0]]:
-        del cache[stale]
+# Every ``corpus_memo`` function in the package, in import order: the
+# warm-up list of bench.py and the memo counters of the service's
+# ``/metrics`` are read from here, never kept by hand.
+MEMOS: list = []
 
 
 def corpus_memo(build):
@@ -57,31 +50,49 @@ def corpus_memo(build):
     (session applicationId, corpus dir), pinning the built frame with
     ``localCheckpoint`` — the materialize-once pattern every shared
     corpus-sized reduce in this repo uses (SCALING.md round-7 lessons).
-    The builder body returns the un-checkpointed DAG; plan tests can pin
-    the builder's shape by calling it through its ``__wrapped__``
-    attribute or a separately exposed ``*_frame`` helper. On a miss the
-    cache first evicts every entry keyed by a DIFFERENT applicationId —
-    those belong to stopped sessions and would otherwise pin unreachable
-    checkpointed-DataFrame handles for the life of a session-restarting
-    process; at most one session's entries survive per memo. Older memos
-    (rounds 2-6) predate this decorator and keep their expanded form
-    where their builders also create temp views or store multiple
-    tables."""
+    It is the package's only session memo: a builder that needs another
+    key argument or returns several frames is split into one memo per
+    frame. The builder body returns the un-checkpointed DAG; plan tests
+    can pin the builder's shape by calling it through its ``__wrapped__``
+    attribute or a separately exposed ``*_frame`` helper.
+
+    On a miss the cache first evicts every entry keyed by a DIFFERENT
+    applicationId — those belong to stopped sessions and would otherwise
+    pin unreachable checkpointed-DataFrame handles for the life of a
+    session-restarting process; at most one session's entries survive
+    per memo. Lookup, eviction, build and counting run under one lock
+    per memo, so concurrent callers of a cold key (threaded ``/query``
+    requests) build it once. Each memo registers in ``MEMOS`` and counts
+    its ``hits``, ``misses`` and ``build_s`` (seconds spent building and
+    checkpointing; a memo built inside another memo's build is counted
+    in both)."""
     import functools
+    import time
 
     cache: dict[tuple[str, str], DataFrame] = {}
+    lock = threading.Lock()
 
     @functools.wraps(build)
     def memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
         ck = (session_key(spark), sf_dir)
-        hit = cache.get(ck)
-        if hit is None:
-            evict_stale(cache, ck)
+        with lock:
+            hit = cache.get(ck)
+            if hit is not None:
+                memoized.hits += 1
+                return hit
+            for stale in [k for k in cache if k[0] != ck[0]]:
+                del cache[stale]
+            t0 = time.perf_counter()
             hit = build(spark, sf_dir).localCheckpoint()
+            memoized.build_s += time.perf_counter() - t0
+            memoized.misses += 1
             cache[ck] = hit
-        return hit
+            return hit
 
     memoized._cache = cache
+    memoized.hits = memoized.misses = 0
+    memoized.build_s = 0.0
+    MEMOS.append(memoized)
     return memoized
 
 

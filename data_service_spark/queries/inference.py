@@ -29,7 +29,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_service_spark.io import evict_stale, load, session_key
+from data_service_spark.io import corpus_memo, load
 from data_service_spark.registry import register
 
 _B = 200  # resample count for bootstrap/permutation
@@ -789,9 +789,7 @@ def _perm_pvals_prefix(hash_to_long: str) -> str:
     )"""
 
 
-_PERM_PVALS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo
 def _perm_pvals_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(event_type, p_num) — the exact md5-permutation p-value FAMILY the
     multiple-testing corrections consume, materialized from
@@ -803,19 +801,10 @@ def _perm_pvals_df(spark: SparkSession, sf_dir: str) -> DataFrame:
     correction it reports from that table — the memo mirrors that, at
     session scope (the same pattern as the shingle-hash memo in
     ``queries/llm.py``)."""
-    ck = (session_key(spark), sf_dir)
-    hit = _PERM_PVALS_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_PERM_PVALS_CACHE, ck)
-    if hit is not None:
-        return hit
     load(spark, sf_dir, "events").createOrReplaceTempView("events")
-    out = spark.sql(
-        _perm_pvals_prefix(_SPARK_HASH)
-        + " SELECT event_type, p_num FROM pvals"
-    ).localCheckpoint()
-    _PERM_PVALS_CACHE[ck] = out
-    return out
+    return spark.sql(
+        _perm_pvals_prefix(_SPARK_HASH) + " SELECT event_type, p_num FROM pvals"
+    )
 
 
 def _body_fdr_bh(hash_to_long: str) -> str:

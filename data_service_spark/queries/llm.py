@@ -23,13 +23,7 @@ from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_service_spark.io import (
-    corpus_memo,
-    evict_stale,
-    load,
-    load_parallel,
-    session_key,
-)
+from data_service_spark.io import corpus_memo, load, load_parallel
 from data_service_spark.registry import register
 
 
@@ -81,9 +75,7 @@ _SHINGLES = (
 )
 
 
-_SHINGLE_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
+@corpus_memo
 def _exploded_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, n_shingles, xxhash64-of-shingle) rows — the shared input of
     the exact-Jaccard pair miners. Shingle strings (~40 bytes) are hashed
@@ -97,12 +89,6 @@ def _exploded_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
     lifetime, so later consumers skip the split/shingle/hash chain
     entirely — the materialize-signals-once pattern a production pipeline
     uses, at session scope."""
-    ck = (session_key(spark), sf_dir)
-    hit = _SHINGLE_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_SHINGLE_CACHE, ck)
-    if hit is not None:
-        return hit
     d = load_parallel(spark, sf_dir, "documents", "doc_id")
     # r14: ONE lambda pass — hash each positional shingle to int64 first,
     # dedup the longs (array_distinct on 8-byte values instead of ~40-byte
@@ -122,22 +108,17 @@ def _exploded_shingle_hashes(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("doc_id", "shingles", F.size("shingles").alias("n"))
     )
-    # Pinned: every consumer self-joins this (a/b aliases), and an aliased
-    # subtree defeats exchange reuse — without the checkpoint the whole
-    # split/shingle/xxhash chain runs once per side (A/B: ~2x cold).
-    out = sh.select(
-        "doc_id", "n", F.explode("shingles").alias("sh")
-    ).localCheckpoint()
-    _SHINGLE_CACHE[ck] = out
-    return out
+    # Pinned by corpus_memo: every consumer self-joins this (a/b
+    # aliases), and an aliased subtree defeats exchange reuse — without
+    # the checkpoint the whole split/shingle/xxhash chain runs once per
+    # side (A/B: ~2x cold).
+    return sh.select("doc_id", "n", F.explode("shingles").alias("sh"))
 
-
-_SHINGLE_ARRAY_CACHE: dict[tuple[str, str], DataFrame] = {}
-_MINHASH_SIG_CACHE: dict[tuple[str, str], DataFrame] = {}
 
 _MINHASH_H = 12  # hashes per signature — 4 bands × 3 rows in production
 
 
+@corpus_memo
 def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, shingles array<string>, n) — the per-doc distinct 5-gram
     shingle LISTS (vs the exploded long form above), the shared input of
@@ -146,24 +127,16 @@ def _shingle_arrays(spark: SparkSession, sf_dir: str) -> DataFrame:
     reason as ``_exploded_shingle_hashes``: several registered keys
     consume it, and a production pipeline materializes the shingle table
     once per corpus, not once per downstream job."""
-    ck = (session_key(spark), sf_dir)
-    hit = _SHINGLE_ARRAY_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_SHINGLE_ARRAY_CACHE, ck)
-    if hit is not None:
-        return hit
     d = load_parallel(spark, sf_dir, "documents", "doc_id")
-    out = (
+    return (
         d.withColumn("words", F.split("text", " "))
         .filter(F.size("words") >= 5)
         .withColumn("shingles", F.expr(_SHINGLES))
         .select("doc_id", "shingles", F.size("shingles").alias("n"))
-        .localCheckpoint()
     )
-    _SHINGLE_ARRAY_CACHE[ck] = out
-    return out
 
 
+@corpus_memo
 def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, h, mh) — the 12-hash md5 Carter–Wegman MinHash signature
     spine, LONG format, shared by the production miner
@@ -182,12 +155,6 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured ~2× slower end-to-end). Exploding the hash index through a
     Generate keeps ha/hb evaluated once per shingle; ha is 60 bits, hb 56
     bits, so ha + 11·hb < 2⁶² — no int64 overflow."""
-    ck = (session_key(spark), sf_dir)
-    hit = _MINHASH_SIG_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_MINHASH_SIG_CACHE, ck)
-    if hit is not None:
-        return hit
     ex = _shingle_arrays(spark, sf_dir).select(
         "doc_id", F.explode("shingles").alias("sh")
     )
@@ -204,13 +171,9 @@ def _minhash_sigs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id", "ha", "hb",
         F.explode(F.sequence(F.lit(0), F.lit(_MINHASH_H - 1))).alias("h"),
     )
-    out = (
-        longh.groupBy("doc_id", "h")
-        .agg(F.min(F.col("ha") + F.col("h") * F.col("hb")).alias("mh"))
-        .localCheckpoint()
+    return longh.groupBy("doc_id", "h").agg(
+        F.min(F.col("ha") + F.col("h") * F.col("hb")).alias("mh")
     )
-    _MINHASH_SIG_CACHE[ck] = out
-    return out
 
 
 
@@ -413,14 +376,18 @@ def _corpus_rows(sf_dir: str) -> int:
     return _footer_rows(sf_dir, "embeddings")
 
 
-_SIM_PAIRS_CACHE: dict[tuple[str, str, float], DataFrame] = {}
-
-
 def sim_pairs(
     spark: SparkSession, sf_dir: str, threshold: float
 ) -> DataFrame:
-    """Memoized entry point over ``sim_pairs_frame``: the thresholded
-    pair list is pinned per (session, corpus, threshold) with
+    """The session-memoized candidate graph at ``threshold`` (0.3 or 0.4,
+    the only two the registry walks): one memo per threshold over
+    ``sim_pairs_frame``."""
+    return {0.3: _sim_pairs_03, 0.4: _sim_pairs_04}[threshold](spark, sf_dir)
+
+
+@corpus_memo
+def _sim_pairs_03(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The thresholded pair list, pinned per (session, corpus) with
     localCheckpoint — seven keys walk the same 0.3/0.4 candidate graphs
     (triangles, clustering coeff, hubness, reciprocal NN, cross-lingual,
     threshold, embedding dedup), and several reference the edge list 3-5
@@ -430,23 +397,13 @@ def sim_pairs(
     materializes the candidate graph once per corpus snapshot). The pair
     list is orders of magnitude smaller than the corpus (thresholded
     Zipf tail), so the checkpoint is edge-sized, never corpus-sized."""
-    ck = (session_key(spark), sf_dir, threshold)
-    hit = _SIM_PAIRS_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_SIM_PAIRS_CACHE, ck)
-        hit = sim_pairs_frame(spark, sf_dir, threshold).localCheckpoint()
-        _SIM_PAIRS_CACHE[ck] = hit
-    return hit
+    return sim_pairs_frame(spark, sf_dir, 0.3)
 
 
-def _sim_pairs_warm_03(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bench.py warm hook: prime the threshold-0.3 candidate graph."""
-    return sim_pairs(spark, sf_dir, 0.3)
-
-
-def _sim_pairs_warm_04(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """bench.py warm hook: prime the threshold-0.4 candidate graph."""
-    return sim_pairs(spark, sf_dir, 0.4)
+@corpus_memo
+def _sim_pairs_04(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The threshold-0.4 twin of ``_sim_pairs_03``."""
+    return sim_pairs_frame(spark, sf_dir, 0.4)
 
 
 def sim_pairs_frame(
@@ -637,9 +594,6 @@ def k_sim_ann(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "k_cluster_assign",
     oracle="""
@@ -658,18 +612,13 @@ _ASSIGN_CACHE: dict[tuple[str, str], DataFrame] = {}
     SELECT vec_id, cluster_id, sim FROM ranked WHERE rn = 1
     """,
 )
+@corpus_memo
 def k_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     """K-means assignment step as join+argmax: every vector to its nearest
     of 10 deterministic centroids (vec_id 0..9). Centroids broadcast; the
     corpus streams once — the building block of IVF-style ANN and of a full
     Lloyd's iteration. Memoized per (session, corpus): four downstream
     evals consume the assignment table."""
-    ck = (session_key(spark), sf_dir)
-    hit = _ASSIGN_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_ASSIGN_CACHE, ck)
-    if hit is not None:
-        return hit
     emb = _emb(spark, sf_dir)
     cent = emb.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("cluster_id"), F.col("v").alias("cv")
@@ -680,14 +629,11 @@ def k_cluster_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("vec_id").orderBy(
         F.round(F.col("sim"), 6).desc(), F.col("cluster_id")
     )
-    out = (
+    return (
         sims.withColumn("rn", F.row_number().over(w))
         .filter(F.col("rn") == 1)
         .select("vec_id", "cluster_id", F.round("sim", 4).alias("sim"))
-        .localCheckpoint()
     )
-    _ASSIGN_CACHE[ck] = out
-    return out
 
 
 # ------------------------------------------------------------- text ----
@@ -1326,9 +1272,6 @@ def k_sim_ann_sql(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-_CC_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
-
-
 @register(
     "k_dedup_clusters",
     oracle="""
@@ -1367,6 +1310,7 @@ _CC_LABELS_CACHE: dict[tuple[str, str], DataFrame] = {}
     SELECT a AS doc_id, min(b) AS cluster_id FROM reach GROUP BY a
     """,
 )
+@corpus_memo
 def k_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Connected components over the near-duplicate graph: every document
     labeled with the min doc_id reachable through Jaccard>=0.6 edges — the
@@ -1385,12 +1329,6 @@ def k_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
     DuckDB oracle computes the same fixpoint declaratively as a
     recursive-CTE transitive closure — two formulations, one semantics.
     """
-    ck = (session_key(spark), sf_dir)
-    hit = _CC_LABELS_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_CC_LABELS_CACHE, ck)
-    if hit is not None:
-        return hit
     d = load_parallel(spark, sf_dir, "documents", "doc_id")
     ex = _exploded_shingle_hashes(spark, sf_dir)
     a = ex.select(F.col("doc_id").alias("doc_id_1"), F.col("n").alias("n1"), "sh")
@@ -1449,9 +1387,7 @@ def k_dedup_clusters(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(labels.select("doc_id"), "doc_id", "left_anti")
         .select("doc_id", F.col("doc_id").alias("cluster_id"))
     )
-    out = labels.unionAll(singletons).localCheckpoint()
-    _CC_LABELS_CACHE[ck] = out
-    return out
+    return labels.unionAll(singletons)
 
 
 def _packed_edges(spark: SparkSession, sf_dir: str) -> DataFrame:

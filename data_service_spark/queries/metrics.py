@@ -19,7 +19,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
-from data_service_spark.io import evict_stale, load, session_key
+from data_service_spark.io import corpus_memo, load
 from data_service_spark.registry import ORACLES as _REG_ORACLES
 from data_service_spark.registry import register
 
@@ -2331,7 +2331,30 @@ def k_eval_avg_precision(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # ------------------------------------- capture-recapture dup audit ----
 
-_CR_PAIRS_CACHE: dict = {}
+
+@corpus_memo
+def _cr_minhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct MinHash-LSH pairs — ``k_capture_recapture``'s capture."""
+    from data_service_spark.registry import QUERIES
+
+    return (
+        QUERIES["k_dedup_minhash_sql"](spark, sf_dir)
+        .select("doc_id_1", "doc_id_2")
+        .distinct()
+    )
+
+
+@corpus_memo
+def _cr_simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Distinct SimHash-banding pairs — ``k_capture_recapture``'s
+    recapture."""
+    from data_service_spark.registry import QUERIES
+
+    return (
+        QUERIES["k_dedup_simhash"](spark, sf_dir)
+        .select("doc_id_1", "doc_id_2")
+        .distinct()
+    )
 
 
 @register(
@@ -2370,24 +2393,7 @@ def k_capture_recapture(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: composes the two banded pipelines (each linear in
     bucket occupancy); the audit itself joins two pair lists — spine
     work."""
-    from data_service_spark.registry import QUERIES
-
-    ck = (session_key(spark), sf_dir)
-    hit = _CR_PAIRS_CACHE.get(ck)
-    if hit is None:
-        evict_stale(_CR_PAIRS_CACHE, ck)
-        hit = (
-            QUERIES["k_dedup_minhash_sql"](spark, sf_dir)
-            .select("doc_id_1", "doc_id_2")
-            .distinct()
-            .localCheckpoint(),
-            QUERIES["k_dedup_simhash"](spark, sf_dir)
-            .select("doc_id_1", "doc_id_2")
-            .distinct()
-            .localCheckpoint(),
-        )
-        _CR_PAIRS_CACHE[ck] = hit
-    a, b = hit
+    a, b = _cr_minhash_pairs(spark, sf_dir), _cr_simhash_pairs(spark, sf_dir)
     s = (
         a.agg(F.count(F.lit(1)).alias("n1"))
         .crossJoin(b.agg(F.count(F.lit(1)).alias("n2")))

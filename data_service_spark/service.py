@@ -33,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_service_spark.io import TABLES, register_temp_views
+from data_service_spark.io import MEMOS, TABLES, register_temp_views
 
 MAX_ROWS = 10_000  # hard cap per request; pagination is the client's job
 
@@ -97,8 +97,9 @@ class SqlEngine:
     def metrics(self) -> dict[str, Any]:
         """Engine observability snapshot: the numbers an operator dashboard
         scrapes — engine version, parallelism, catalog/stream/registry
-        sizes, and the JVM's executor-side job counters from the status
-        tracker. Cheap (driver-side metadata only, no jobs run)."""
+        sizes, the JVM's executor-side job counters from the status
+        tracker, and each session memo's hit/miss/build-second counters
+        (``io.MEMOS``). Cheap (driver-side metadata only, no jobs run)."""
         sc = self.spark.sparkContext
         tracker = sc.statusTracker()
         return {
@@ -109,6 +110,14 @@ class SqlEngine:
             "n_query_keys": len(self.query_keys()),
             "active_job_ids": list(tracker.getActiveJobsIds()),
             "active_stage_ids": list(tracker.getActiveStageIds()),
+            "memos": {
+                m.__name__: {
+                    "hits": m.hits,
+                    "misses": m.misses,
+                    "build_s": round(m.build_s, 3),
+                }
+                for m in MEMOS
+            },
         }
 
     def streams(self) -> list[dict[str, Any]]:

@@ -16,6 +16,9 @@ import os
 
 from pyspark.sql import SparkSession
 
+# The directory that holds the ``data_service_spark`` package.
+_PACKAGE_ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+
 
 def get_spark(app_name: str = "data_service_spark", master: str | None = None) -> SparkSession:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
@@ -44,5 +47,9 @@ def get_spark(app_name: str = "data_service_spark", master: str | None = None) -
         # corpus (the current one) never runs under the legacy flag.
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
+        # Python workers unpickle functions and data-source classes that
+        # live in this package; without this they find it only when the
+        # process happens to run from the repo root or PYTHONPATH names it.
+        .config("spark.executorEnv.PYTHONPATH", _PACKAGE_ROOT)
     )
     return builder.getOrCreate()

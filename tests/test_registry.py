@@ -301,7 +301,7 @@ def test_priority_keys_all_exist():
     # a rename can't quietly shrink the driver's recorded-verdict sample.
     import __spark_entry__ as E
 
-    assert set(E.PRIORITY) <= set(QUERIES)
+    assert set(E.PRIORITY) == set(QUERIES)
     assert len(E.PRIORITY) == len(set(E.PRIORITY))
 
 
@@ -343,9 +343,13 @@ def test_memo_caches_evict_stopped_session_entries():
     """Every per-(session, corpus) memo evicts entries keyed by a stale
     applicationId on its next miss (ADVICE r07): a session-restarting
     process must not accumulate checkpointed-DataFrame handles bound to
-    stopped contexts. Pure-Python — exercised through corpus_memo with a
-    stub session, plus a direct evict_stale contract check."""
-    from data_service_spark.io import corpus_memo, evict_stale
+    stopped contexts. Concurrent callers of one cold key build it once,
+    and the memo's hit/miss counters add up to its calls. Pure-Python —
+    exercised through corpus_memo with a stub session."""
+    import time
+    from concurrent.futures import ThreadPoolExecutor
+
+    from data_service_spark.io import MEMOS, corpus_memo
 
     class _Ctx:
         def __init__(self, app_id):
@@ -363,22 +367,33 @@ def test_memo_caches_evict_stopped_session_entries():
 
     @corpus_memo
     def _builder(spark, sf_dir):
+        time.sleep(0.05)  # widen the window a second builder would race in
         builds.append((spark.sparkContext.applicationId, sf_dir))
         return _StubFrame()
 
-    s1, s2 = _StubSession("app-1"), _StubSession("app-2")
-    _builder(s1, "/corpus/a")
-    _builder(s1, "/corpus/b")
-    assert len(_builder._cache) == 2
-    _builder(s1, "/corpus/a")  # hit: no rebuild, no eviction
-    assert len(builds) == 2
-    # New session: first miss purges BOTH app-1 entries before storing.
-    _builder(s2, "/corpus/a")
-    assert set(_builder._cache) == {("app-2", "/corpus/a")}
-    # Direct contract: evict_stale keeps only the current session's keys.
-    cache = {("old", "x"): 1, ("old", "y"): 2, ("new", "x"): 3}
-    evict_stale(cache, ("new", "z"))
-    assert cache == {("new", "x"): 3}
+    try:
+        assert MEMOS[-1] is _builder
+        s1, s2 = _StubSession("app-1"), _StubSession("app-2")
+        n_threads = 8
+        with ThreadPoolExecutor(max_workers=n_threads) as pool:
+            frames = list(
+                pool.map(lambda _: _builder(s1, "/corpus/a"), range(n_threads))
+            )
+        assert builds == [("app-1", "/corpus/a")]
+        assert all(f is frames[0] for f in frames)
+        assert (_builder.misses, _builder.hits) == (1, n_threads - 1)
+        assert _builder.build_s > 0
+        _builder(s1, "/corpus/b")
+        assert len(_builder._cache) == 2
+        _builder(s1, "/corpus/a")  # hit: no rebuild, no eviction
+        assert len(builds) == 2
+        assert (_builder.misses, _builder.hits) == (2, n_threads)
+        # New session: first miss purges BOTH app-1 entries before storing.
+        _builder(s2, "/corpus/a")
+        assert set(_builder._cache) == {("app-2", "/corpus/a")}
+        assert _builder.misses == 3
+    finally:
+        MEMOS.remove(_builder)
 
 
 def test_oracles_use_global_flag_on_regexp_replace():

@@ -75,3 +75,22 @@ def test_flat_rows_only_key_passes(spark, monkeypatch):
     )
     ok, msg = run_one(spark, None, "_guard_probe_flat", SF)
     assert ok and msg.startswith("rows-only")
+
+
+def test_python_workers_import_package_from_any_cwd(tmp_path):
+    """Spark's Python workers must import ``data_service_spark`` when the
+    session's process runs outside the repo with PYTHONPATH unset: the
+    Python data-source writer (``a_sink_avro``) and the pandas UDF of
+    ``k_outlier_lof`` unpickle package code in those workers."""
+    import subprocess
+
+    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+    env = {k: v for k, v in os.environ.items() if k != "PYTHONPATH"}
+    env.update(SPARK_GRAFT_SF_DIR=SF, SPARK_GRAFT_CPUS="2")
+    out = subprocess.run(
+        [sys.executable, os.path.join(repo, "tools", "selfcheck.py"),
+         "a_sink_avro", "k_outlier_lof"],
+        cwd=tmp_path, env=env, capture_output=True, text=True, timeout=600,
+    )
+    assert out.returncode == 0, out.stdout[-2000:] + out.stderr[-2000:]
+    assert "2/2 passed" in out.stdout

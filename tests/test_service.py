@@ -211,6 +211,15 @@ def test_metrics_endpoint(service):
     assert body["n_query_keys"] >= 343
     assert body["n_tables"] >= 10
     assert isinstance(body["active_job_ids"], list)
+    # Memo counters: k_cluster_assign is itself a session memo, so two
+    # /query calls of it are at least one hit (the first may build it).
+    before = body["memos"]["k_cluster_assign"]
+    for _ in range(2):
+        call(service, "/query", {"key": "k_cluster_assign", "limit": 5})
+    after = call(service, "/metrics")["memos"]["k_cluster_assign"]
+    assert after["hits"] >= before["hits"] + 1
+    assert after["hits"] + after["misses"] == before["hits"] + before["misses"] + 2
+    assert after["build_s"] >= before["build_s"]
 
 
 def test_concurrent_sql_requests(service):

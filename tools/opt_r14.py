@@ -1,12 +1,16 @@
-"""Round-13 optimization harness.
+"""Per-key optimization harness: plans, a plan census, and warm timings.
 
     python tools/opt_r14.py plan <suffix> key [key ...]   # plans/r14/<key>_<suffix>.txt
+    python tools/opt_r14.py census [key ...]              # multi-scan joins to review
     python tools/opt_r14.py time <reps> key [key ...]     # noop-timed, warm session
 
-Timing mirrors bench.py methodology (shared warm session, noop sink, memo
-pre-warm) so numbers are comparable with bench_full.json; reports every rep
-so min/steady-state is visible. Plans are captured at sf0.1 (the bench SF)
-via explain('formatted').
+Timing mirrors bench.py methodology (shared warm session, noop sink) so
+numbers are comparable with bench_full.json; reports every rep and the
+min. ``reps`` must be 2 or more: session memos are not pre-warmed, so a
+key's first rep may pay its memo builds, and the min over 2+ reps is the
+memo-read cost bench.py reports. Keeping the warm-up free of memo names
+lets tools/retime_movers.py run this file inside older checkouts. Plans
+are captured at sf0.1 (the bench SF) via explain('formatted').
 """
 
 from __future__ import annotations
@@ -26,8 +30,8 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
 
 def _warm(spark):
-    """Same session warms as bench.py: memoized shared intermediates out of
-    the timed region, JIT ramps paid once."""
+    """bench.py's JIT warms: the first scan and the shuffle/join/window
+    codegen paths are paid once, outside the timed reps."""
     QUERIES["a_scan_prune"](spark, SF_DIR).write.format("noop").mode("overwrite").save()
     from pyspark.sql import functions as F  # noqa: PLC0415
     from pyspark.sql.window import Window  # noqa: PLC0415
@@ -41,36 +45,6 @@ def _warm(spark):
                 F.sum("v").over(warm_r).alias("rsum"))
         .orderBy("k", "rn").limit(100)
     ).write.format("noop").mode("overwrite").save()
-    # Import each memo warm defensively: retime_movers.py runs this file
-    # inside OLDER checkouts (git worktrees of prior rounds) whose module
-    # surface may not have every helper yet.
-    import importlib
-
-    warm_specs = [
-        ("data_service_spark.queries.llm", "_exploded_shingle_hashes"),
-        ("data_service_spark.queries.llm", "_minhash_sigs"),
-        ("data_service_spark.queries.llm", "_cs_pairs"),
-        ("data_service_spark.queries.corpus_stats", "_unigram_counts"),
-        ("data_service_spark.queries.corpus_stats", "_bigram_counts"),
-        ("data_service_spark.queries.llm", "_exact_ranked"),
-        ("data_service_spark.queries.llm_text", "_ff_feats_df"),
-        ("data_service_spark.queries.llm_text", "_simhash_fp"),
-        ("data_service_spark.queries.llm_text", "k_text_bm25"),
-        ("data_service_spark.queries.llm", "_minhash_pairs"),
-        ("data_service_spark.queries.llm", "_near_pairs"),
-        ("data_service_spark.queries.llm", "_signrp_buckets"),
-        ("data_service_spark.queries.llm", "_sim_pairs_warm_03"),
-        ("data_service_spark.queries.llm", "_sim_pairs_warm_04"),
-        ("data_service_spark.queries.inference", "_perm_pvals_df"),
-        ("data_service_spark.queries.llm", "k_cluster_assign"),
-        ("data_service_spark.queries.llm", "k_dedup_clusters"),
-    ]
-    for mod_name, fn_name in warm_specs:
-        try:
-            fn = getattr(importlib.import_module(mod_name), fn_name)
-            fn(spark, SF_DIR).write.format("noop").mode("overwrite").save()
-        except Exception:
-            pass
 
 
 def main() -> None:
@@ -126,6 +100,8 @@ def main() -> None:
 
     if mode == "time":
         reps = int(sys.argv[2])
+        if reps < 2:
+            raise SystemExit("time: reps must be 2 or more (see module docstring)")
         keys = sys.argv[3:]
         _warm(spark)
         for key in keys:
