@@ -101,7 +101,7 @@ def test_topk_uses_take_ordered(spark, sf_dir):
     assert "TakeOrderedAndProject" in plan
 
 
-def test_registry_wide_cartesian_and_decimal_audit(spark, sf_dir):
+def test_registry_wide_cartesian_and_decimal_audit(spark, sf_dir, monkeypatch):
     """Global single-pass audit (r13: merged the former cartesian-product
     and decimal-output sweeps, which each rebuilt all ~600 key DataFrames —
     the two slowest tests in the suite at ~165 s combined):
@@ -149,8 +149,14 @@ def test_registry_wide_cartesian_and_decimal_audit(spark, sf_dir):
     # really does go cartesian; same for the partition-overwrite and
     # pushdown toggles), and (b) sink builds, whose first-touch of a
     # format races Spark's DataSource ServiceLoader lookup
-    # (SparkClassNotFoundException on avro under the pool).
+    # (SparkClassNotFoundException on avro under the pool). Class (a) is
+    # guarded below: every RuntimeConfig.set made while a pooled key
+    # builds is charged to that key, so a new conf-mutating builder fails
+    # by name instead of as a spurious CartesianProduct elsewhere.
+    import threading
     from concurrent.futures import ThreadPoolExecutor
+
+    from pyspark.sql.conf import RuntimeConfig
 
     conf_mutators = {
         "c_join_bloom",
@@ -178,9 +184,31 @@ def test_registry_wide_cartesian_and_decimal_audit(spark, sf_dir):
         return None
 
     bad = [r for k in sorted(serial_keys) for r in [audit(k)] if r is not None]
+    building = threading.local()
+    conf_sets: list[tuple[str, str]] = []
+    real_set = RuntimeConfig.set
+
+    def charged_set(self, key, value):
+        owner = getattr(building, "key", None)
+        if owner is not None:
+            conf_sets.append((owner, key))
+        return real_set(self, key, value)
+
+    def pooled_audit(key: str):
+        building.key = key
+        try:
+            return audit(key)
+        finally:
+            building.key = None
+
+    monkeypatch.setattr(RuntimeConfig, "set", charged_set)
     pooled = [k for k in sorted(QUERIES) if k not in serial_keys]
     with ThreadPoolExecutor(max_workers=12) as pool:
-        bad += [r for r in pool.map(audit, pooled) if r is not None]
+        bad += [r for r in pool.map(pooled_audit, pooled) if r is not None]
+    bad += [
+        (k, f"sets session conf {c} while pooled: add it to conf_mutators")
+        for k, c in sorted(set(conf_sets))
+    ]
     assert not bad, bad
 
 

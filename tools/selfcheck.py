@@ -13,6 +13,11 @@ value multiset. Run BEFORE the driver does:
 --plain runs on a bare SparkSession (no session.py confs) — exactly what
 the driver's verify uses; run it before relying on any conf set in
 data_service_spark.session (queries must set what they need themselves).
+
+At sf0.1 the DuckDB oracles of k_graph_components and k_label_noise_knn
+run out of memory under a 3 GB DuckDB memory limit, and k_graph_kcore
+under 1 GB; all three pass at 7 GB. On a small machine a failure on those
+keys is an oracle out-of-memory error, not a parity failure.
 """
 
 from __future__ import annotations
