@@ -23,13 +23,17 @@ driver collect, no result pruning — a bare count() would let Catalyst drop
 computed columns). Session is shared across keys (SURVEY.md §6: per-query
 JVM startup would dominate at sf0.1).
 
-Re-time rule: a key whose first reading is >= 0.5 s runs twice more, after
-every key's first reading, and reports the min of its three runs; every
-other key reports its single run.
-Nothing outside the current run feeds the rule, so identical code reads the
-same estimator in every checkout. Min, not median: timing noise on a shared
-host is one-sided (contention only adds time, and memos are pre-warmed), so
-the min is the best estimate of the cost.
+Re-time rule: every key runs once in a first pass over all keys, then twice
+more back to back, and reports the min of its three runs. Nothing outside
+the current run feeds the rule, and no key's estimator depends on its own
+reading, so identical code reads the same estimator in every checkout and
+at every scale. Two variants read worse at sf0.01: re-timing only keys whose
+first reading is >= 0.5 s left each key just under that floor reporting its
+first in-session run, up to 1.9x its min of three; and spreading the
+re-runs over two more passes over all keys read slower than back-to-back
+re-runs. Min, not median: timing noise on a shared host is one-sided
+(contention only adds time, and memos are pre-warmed), so the min is the
+best estimate of the cost.
 
 ``time`` runs the same warm-up but no memo warm, so the first rep may pay
 memo builds; it therefore takes 2 or more reps. ``ab`` checks ``<ref>`` out
@@ -62,7 +66,7 @@ from data_service_spark.registry import QUERIES, load_all  # noqa: E402
 from data_service_spark.session import get_spark  # noqa: E402
 
 MODES = ("time", "plan", "census", "ab")
-RETIME_FLOOR_S = 0.5
+RUNS = 3
 
 HEADLINE = [
     "a_scan_filter_pushdown",
@@ -123,35 +127,32 @@ def _once(run_key, key: str, clock=time.perf_counter) -> float:
 
 
 def time_keys(keys, run_key, clock=time.perf_counter):
-    """Time ``run_key(key)`` for each key under the re-time rule (module
-    docstring). Returns ``(timings, retimed, failures)``: the reported
-    seconds per key, the three runs of each re-timed key, and the error of
-    each key that raised on any run."""
-    timings: dict[str, float] = {}
-    retimed: dict[str, list[float]] = {}
-    failures: dict[str, str] = {}
+    """Time ``run_key(key)`` RUNS times per key: one first reading of every
+    key, then each key's re-runs back to back. Returns ``(runs, errors)``:
+    every reading per key, and the error of each key that raised. A key
+    that raises stops running: with no reading it has no entry in
+    ``runs``; after one it keeps the readings it has."""
+    runs: dict[str, list[float]] = {}
+    errors: dict[str, str] = {}
 
-    def failed(key: str, exc: Exception) -> None:
-        failures[key] = f"{type(exc).__name__}: {exc}"[:200]
+    def run(key: str) -> bool:
+        try:
+            t = _once(run_key, key, clock)
+        except Exception as exc:  # one bad key must not sink the whole run
+            errors[key] = f"{type(exc).__name__}: {exc}"[:200]
+            return False
+        runs.setdefault(key, []).append(t)
+        return True
 
     for key in keys:
-        try:
-            timings[key] = _once(run_key, key, clock)
-        except Exception as exc:  # one bad key must not sink the whole run
-            failed(key, exc)
-    # The re-runs come after every first reading, so a key's three samples
-    # do not share one contention window, and an early key re-runs in as
-    # warm a session as a late one.
-    for key in [k for k, t in timings.items() if t >= RETIME_FLOOR_S]:
-        try:
-            runs = [timings[key], _once(run_key, key, clock), _once(run_key, key, clock)]
-        except Exception as exc:
-            failed(key, exc)
-            del timings[key]
-            continue
-        retimed[key] = runs
-        timings[key] = min(runs)
-    return timings, retimed, failures
+        run(key)
+    # The re-runs come after every first reading, so an early key re-runs
+    # in as warm a session as a late one.
+    for key in list(runs):
+        for _ in range(RUNS - 1):
+            if not run(key):
+                break
+    return runs, errors
 
 
 def _warm(spark, sf_dir: str) -> None:
@@ -334,25 +335,24 @@ def _ab(ref: str, reps: int, keys: list[str]) -> None:
         subprocess.run(
             ["git", "worktree", "add", "--detach", prev_dir, ref], cwd=HERE, check=True
         )
-        try:
-            # This file times the OLD code: it imports the data_service_spark
-            # that sits next to it.
-            shutil.copy(os.path.abspath(__file__), prev_dir)
-            results = {k: {"now": [], "prev": []} for k in keys}
-            for rnd in range(2):
-                for label, side in (("now", HERE), ("prev", prev_dir)):
-                    mins = _time_side(side, reps, keys)
-                    for k in keys:
-                        if k in mins:
-                            results[k][label].append(mins[k])
-                    print(f"[round {rnd}] {label}: " + " ".join(
-                        f"{k}={mins.get(k, float('nan')):.3f}" for k in keys))
-        finally:
-            subprocess.run(
-                ["git", "worktree", "remove", "--force", prev_dir], cwd=HERE, check=True
-            )
+        # This file times the OLD code: it imports the data_service_spark
+        # that sits next to it.
+        shutil.copy(os.path.abspath(__file__), prev_dir)
+        results = {k: {"now": [], "prev": []} for k in keys}
+        for rnd in range(2):
+            for label, side in (("now", HERE), ("prev", prev_dir)):
+                mins = _time_side(side, reps, keys)
+                for k in keys:
+                    if k in mins:
+                        results[k][label].append(mins[k])
+                print(f"[round {rnd}] {label}: " + " ".join(
+                    f"{k}={mins.get(k, float('nan')):.3f}" for k in keys))
     finally:
+        # No check: a failed remove must not hide the body's error, and
+        # prune drops the worktree entry once its directory is gone.
+        subprocess.run(["git", "worktree", "remove", "--force", prev_dir], cwd=HERE)
         shutil.rmtree(tmp, ignore_errors=True)
+        subprocess.run(["git", "worktree", "prune"], cwd=HERE)
 
     print("\nper-key adjudication (min across interleaved sessions):")
     for k in keys:
@@ -426,7 +426,11 @@ def _full_run(spark, sf_dir: str, only: list[str]) -> None:
             if sum(m.hits for m in MEMOS) > hits0 and key not in memo_backed:
                 memo_backed.append(key)
 
-    timings, retimed, failures = time_keys(keys, run_key)
+    runs, errors = time_keys(keys, run_key)
+    timings = {k: min(r) for k, r in runs.items()}
+    # A key with a reading keeps it when a re-run raises: its error is kept
+    # with its runs, and only keys with no reading count as failures.
+    failures = {k: e for k, e in errors.items() if k not in runs}
     sf = os.path.basename(sf_dir.rstrip("/")).replace("sf", "")
     full = {
         "metric": "wallclock_all_queries",
@@ -439,15 +443,12 @@ def _full_run(spark, sf_dir: str, only: list[str]) -> None:
         # session total is value + memo_build_sec.
         "memo_build_sec": memo_build_sec,
         "memo_builds": memo_builds,
-        "estimators": {
-            k: "min_of_3" if k in retimed else "single_run" for k in timings
-        },
+        "estimators": {k: f"min_of_{len(r)}" for k, r in runs.items()},
         **({"memoized": memo_backed} if memo_backed else {}),
-        **(
-            {"variance_retimed": {k: {"runs": r} for k, r in retimed.items()}}
-            if retimed
-            else {}
-        ),
+        "variance_retimed": {
+            k: {"runs": r, **({"rerun_error": errors[k]} if k in errors else {})}
+            for k, r in runs.items()
+        },
         **({"failures": failures} if failures else {}),
     }
     # Subset invocations (bench.py key1 key2 ...) are iteration tools;
@@ -466,8 +467,7 @@ def _full_run(spark, sf_dir: str, only: list[str]) -> None:
         dict(timings) if only else {k: timings[k] for k in HEADLINE if k in timings}
     )
     line.update({k: full[k] for k in ("n_queries", "sf", "memo_build_sec")})
-    if retimed:
-        line["n_retimed"] = len(retimed)
+    line["n_retimed"] = sum(len(r) > 1 for r in runs.values())
     if failures:
         line["failures"] = {k: v[:60] for k, v in list(failures.items())[:5]}
     out = json.dumps(line, separators=(",", ":"))

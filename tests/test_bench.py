@@ -2,8 +2,6 @@
 
 from __future__ import annotations
 
-import builtins
-
 import pytest
 
 import bench
@@ -18,35 +16,30 @@ def _clock(readings: list[float]):
     return iter(ticks).__next__
 
 
-def test_retime_rule_is_read_from_the_run_alone(monkeypatch):
-    def no_file(*args, **kwargs):
-        raise AssertionError(f"the re-time rule opened a file: {args}")
-
-    monkeypatch.setattr(builtins, "open", no_file)
+def test_every_key_runs_once_then_twice_more_back_to_back():
     calls: list[str] = []
-    timings, retimed, failures = bench.time_keys(
-        ["fast", "slow"], calls.append, _clock([0.499, 0.5, 0.3, 0.4])
+    runs, errors = bench.time_keys(
+        ["fast", "slow"], calls.append, _clock([0.2, 0.9, 0.1, 0.3, 0.5, 0.6])
     )
-    assert calls == ["fast", "slow", "slow", "slow"]
-    assert timings == {"fast": 0.499, "slow": 0.3}
-    assert retimed == {"slow": [0.5, 0.3, 0.4]}
-    assert failures == {}
+    assert calls == ["fast", "slow", "fast", "fast", "slow", "slow"]
+    assert runs == {"fast": [0.2, 0.1, 0.3], "slow": [0.9, 0.5, 0.6]}
+    assert errors == {}
 
 
-def test_retime_rule_reports_a_failing_rerun_as_a_failure():
+def test_a_failing_rerun_keeps_the_readings_it_has():
     def run_key(key: str) -> None:
         calls.append(key)
-        if len(calls) == 3:
-            raise RuntimeError("second run broke")
+        if key == "bad" or len(calls) == 4:
+            raise RuntimeError(f"{key} broke")
 
     calls: list[str] = []
-    # k reads 0.6 s and next 0.1 s; k's first re-run raises before the
-    # clock stops.
-    ticks = iter([0.0, 0.6, 10.0, 10.1, 20.0])
-    timings, retimed, failures = bench.time_keys(["k", "next"], run_key, ticks.__next__)
-    assert calls == ["k", "next", "k"]
-    assert failures == {"k": "RuntimeError: second run broke"}
-    assert timings == {"next": 0.1} and retimed == {}
+    # "bad" raises on its first run and "k" on its first re-run, each
+    # before the clock stops; neither runs again.
+    ticks = iter([0.0, 0.6, 10.0, 20.0, 20.2, 30.0, 40.0, 40.3, 50.0, 50.1])
+    runs, errors = bench.time_keys(["k", "bad", "next"], run_key, ticks.__next__)
+    assert calls == ["k", "bad", "next", "k", "next", "next"]
+    assert runs == {"k": [0.6], "next": [0.2, 0.3, 0.1]}
+    assert errors == {"k": "RuntimeError: k broke", "bad": "RuntimeError: bad broke"}
 
 
 def test_mode_names_are_not_registry_keys():
