@@ -32,8 +32,10 @@ first reading is >= 0.5 s left each key just under that floor reporting its
 first in-session run, up to 1.9x its min of three; and spreading the
 re-runs over two more passes over all keys read slower than back-to-back
 re-runs. Min, not median: timing noise on a shared host is one-sided
-(contention only adds time, and memos are pre-warmed), so the min is the
-best estimate of the cost.
+(contention only adds time, and a full run pre-warms the memos), so the min
+is the best estimate of the cost. A subset run warms no memo: a requested
+key that reads one pays its build in its first run, which the min discards,
+and ``memo_build_sec`` sums the builds the run made.
 
 ``time`` runs the same warm-up but no memo warm, so the first rep may pay
 memo builds; it therefore takes 2 or more reps. ``ab`` checks ``<ref>`` out
@@ -379,54 +381,57 @@ def _full_run(spark, sf_dir: str, only: list[str]) -> None:
     if only:
         keys = [k for k in keys if k in only]
     _warm(spark, sf_dir)
-    # Warm every session memo (io.MEMOS: 5-gram shingle hashes, CC
-    # labels, centroid assignment, ...) OUTSIDE the timed region:
-    # whichever consumer key happens to run first would otherwise absorb
-    # the whole shared chain's cost — a run-order artifact, not that key's
-    # price (this is what made k_text_contamination read 12 s in r02 while
-    # its steady state is ~2 s). A production pipeline materializes these
-    # once per corpus; the bench mirrors that. Subset runs still pay the
-    # memo warms (~30 s at sf0.01 on 4 CPUs) even when no requested key
-    # consumes them. The one exception is a_sink_hive_table: its memo spawns a
-    # ~15 s Derby child JVM, only worth paying when the timed pass will
-    # hit the hive key (always true on a full run, rarely on a subset).
-    warm_fns = [
-        m
-        for m in MEMOS
-        if m.__name__ != "a_sink_hive_table" or not only or m.__name__ in keys
-    ]
-    # VERDICT r13 #2: the memo builds run untimed here, so consumer keys'
-    # timed numbers are memo READS. Report the total build seconds as
+    # A full run warms every session memo (io.MEMOS: 5-gram shingle
+    # hashes, CC labels, centroid assignment, ...) OUTSIDE the timed
+    # region: whichever consumer key happens to run first would otherwise
+    # absorb the whole shared chain's cost — a run-order artifact, not
+    # that key's price (this is what made k_text_contamination read 12 s
+    # in r02 while its steady state is ~2 s). A production pipeline
+    # materializes these once per corpus; the bench mirrors that. A subset
+    # run warms none: a requested key that reads a memo builds it on its
+    # first run, which the min of three discards, and no run pays for
+    # memos that no requested key reads (27-43 s when it warmed them all).
+    # VERDICT r13 #2: the memo builds run untimed, so consumer keys' timed
+    # numbers are memo READS. Report the total build seconds as
     # memo_build_sec so wallclock_all_queries + memo_build_sec is the
     # honest session total (the JIT/classload warms above stay out: they
     # are session bring-up, not query compute).
     memo_build_t0 = time.perf_counter()
-    for warm_fn in warm_fns:
+    for warm_fn in [] if only else MEMOS:
         try:
             _sink(warm_fn(spark, sf_dir))
         except Exception:
             pass  # a missing corpus table must not sink the bench
     memo_build_sec = round(time.perf_counter() - memo_build_t0, 3)
-    # Per-memo build seconds (VERDICT r14 #3); a memo built inside another
-    # memo's build counts in both, so these may sum past memo_build_sec.
-    memo_builds = {m.__name__: round(m.build_s, 3) for m in warm_fns}
 
     # Keys whose timed number is a memo READ, not the query: total memo
-    # hits grew during the key's timed runs (every memo is warm by now, so
-    # a memo call there is a hit). History readers need this to tell
-    # warm-path step-changes from real wins across the memoization regime
-    # changes (ADVICE r07).
+    # calls grew during the key's timed runs (on a full run every memo is
+    # warm, so a memo call there is a hit; on a subset the first is a
+    # miss). History readers need this to tell warm-path step-changes from
+    # real wins across the memoization regime changes (ADVICE r07).
     memo_backed: list[str] = []
 
+    def memo_calls() -> int:
+        return sum(m.hits + m.misses for m in MEMOS)
+
     def run_key(key: str) -> None:
-        hits0 = sum(m.hits for m in MEMOS)
+        calls0 = memo_calls()
         try:
             _sink(QUERIES[key](spark, sf_dir))
         finally:
-            if sum(m.hits for m in MEMOS) > hits0 and key not in memo_backed:
+            if memo_calls() > calls0 and key not in memo_backed:
                 memo_backed.append(key)
 
     runs, errors = time_keys(keys, run_key)
+    # Per-memo build seconds (VERDICT r14 #3), read after the run so a
+    # subset reports the memos its keys built. A memo built inside another
+    # memo's build counts in both, so these may sum past the time spent,
+    # and a subset's memo_build_sec, their sum, is an upper bound.
+    memo_builds = {
+        m.__name__: round(m.build_s, 3) for m in MEMOS if m.misses or not only
+    }
+    if only:
+        memo_build_sec = round(sum(memo_builds.values()), 3)
     timings = {k: min(r) for k, r in runs.items()}
     # A key with a reading keeps it when a re-run raises: its error is kept
     # with its runs, and only keys with no reading count as failures.

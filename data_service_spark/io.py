@@ -1,20 +1,25 @@
 """Source/sink helpers over the test corpus.
 
 The corpus (TESTDATA.md) is one parquet file per table under a scale-factor
-directory. Loading is always ``spark.read.parquet`` — schema travels with the
-file, Catalyst gets pushdown/pruning for free, and at cluster scale the same
-call transparently reads a multi-file partitioned dataset.
+directory. ``load`` resolves each table's schema from its parquet footers
+once per session and per ``corpus_fingerprint`` of the table path, then
+builds every call's relation with ``spark.read.schema(s).parquet(path)``:
+a fresh relation per call (pushdown and pruning intact, distinct attribute
+ids for self-joins) without a schema-inference job per call. At cluster
+scale the same call reads a multi-file partitioned dataset; a path that
+cannot be stat'ed locally is read with inference every time.
 """
 
 from __future__ import annotations
 
 import os
 import re
+import stat
 import threading
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql.types import LongType
+from pyspark.sql.types import LongType, StructType
 
 TABLES = [
     "region",
@@ -39,6 +44,24 @@ def session_key(spark: SparkSession) -> str:
     return spark.sparkContext.applicationId
 
 
+def corpus_fingerprint(path: str):
+    """Change detector for a table path or a whole corpus dir:
+    ``(st_size, st_mtime_ns)`` from ``os.stat`` for a file; for a
+    directory, the same pair plus every entry's fingerprint by name, so a
+    part file added, removed or rewritten in place under the same path
+    changes it. ``None`` when the path cannot be stat'ed (a non-local URI
+    at cluster scale)."""
+    try:
+        st = os.stat(path)
+        if not stat.S_ISDIR(st.st_mode):
+            return (st.st_size, st.st_mtime_ns)
+        with os.scandir(path) as entries:
+            inner = sorted((e.name, corpus_fingerprint(e.path)) for e in entries)
+    except OSError:
+        return None
+    return (st.st_size, st.st_mtime_ns, tuple(inner))
+
+
 # Every ``corpus_memo`` function in the package, in import order: the
 # warm-up list of bench.py and the memo counters of the service's
 # ``/metrics`` are read from here, never kept by hand.
@@ -47,46 +70,52 @@ MEMOS: list = []
 
 def corpus_memo(build):
     """Decorator: memoize a ``(spark, sf_dir) -> DataFrame`` builder per
-    (session applicationId, corpus dir), pinning the built frame with
-    ``localCheckpoint`` — the materialize-once pattern every shared
-    corpus-sized reduce in this repo uses (SCALING.md round-7 lessons).
+    (session applicationId, corpus dir, ``corpus_fingerprint(sf_dir)``),
+    pinning the built frame with ``localCheckpoint`` — the
+    materialize-once pattern every shared corpus-sized reduce in this repo
+    uses (SCALING.md round-7 lessons).
     It is the package's only session memo: a builder that needs another
     key argument or returns several frames is split into one memo per
     frame. The builder body returns the un-checkpointed DAG; plan tests
     can pin the builder's shape by calling it through its ``__wrapped__``
     attribute or a separately exposed ``*_frame`` helper.
 
-    On a miss the cache first evicts every entry keyed by a DIFFERENT
-    applicationId — those belong to stopped sessions and would otherwise
-    pin unreachable checkpointed-DataFrame handles for the life of a
-    session-restarting process; at most one session's entries survive
-    per memo. Lookup, eviction, build and counting run under one lock
-    per memo, so concurrent callers of a cold key (threaded ``/query``
-    requests) build it once. Each memo registers in ``MEMOS`` and counts
-    its ``hits``, ``misses`` and ``build_s`` (seconds spent building and
-    checkpointing; a memo built inside another memo's build is counted
-    in both)."""
+    A table rewritten in place under the same path changes the
+    fingerprint, so the next call rebuilds instead of serving the stale
+    checkpoint; the rebuilt entry replaces the old one (at most one entry
+    per session and corpus dir). On a miss the cache first evicts every
+    entry keyed by a DIFFERENT applicationId — those belong to stopped
+    sessions and would otherwise pin unreachable checkpointed-DataFrame
+    handles for the life of a session-restarting process; at most one
+    session's entries survive per memo. Lookup, eviction, build and
+    counting run under one lock per memo, so concurrent callers of a cold
+    key (threaded ``/query`` requests) build it once. Each memo registers
+    in ``MEMOS`` and counts its ``hits``, ``misses`` and ``build_s``
+    (seconds spent building and checkpointing; a memo built inside another
+    memo's build is counted in both)."""
     import functools
     import time
 
-    cache: dict[tuple[str, str], DataFrame] = {}
+    # (applicationId, sf_dir) -> (fingerprint, checkpointed frame)
+    cache: dict[tuple[str, str], tuple[object, DataFrame]] = {}
     lock = threading.Lock()
 
     @functools.wraps(build)
     def memoized(spark: SparkSession, sf_dir: str) -> DataFrame:
         ck = (session_key(spark), sf_dir)
+        fp = corpus_fingerprint(sf_dir)
         with lock:
-            hit = cache.get(ck)
-            if hit is not None:
+            entry = cache.get(ck)
+            if entry is not None and entry[0] == fp:
                 memoized.hits += 1
-                return hit
+                return entry[1]
             for stale in [k for k in cache if k[0] != ck[0]]:
                 del cache[stale]
             t0 = time.perf_counter()
             hit = build(spark, sf_dir).localCheckpoint()
             memoized.build_s += time.perf_counter() - t0
             memoized.misses += 1
-            cache[ck] = hit
+            cache[ck] = (fp, hit)
             return hit
 
     memoized._cache = cache
@@ -96,8 +125,41 @@ def corpus_memo(build):
     return memoized
 
 
+_NANOS_CONF = "spark.sql.legacy.parquet.nanosAsLong"
+# (applicationId, table path) -> (fingerprint, schema, events nanos-as-long)
+_SCHEMAS: dict[tuple[str, str], tuple[object, StructType, bool]] = {}
+_SCHEMAS_LOCK = threading.Lock()
+# ``load``'s schema-cache counters for the service's ``/metrics``: a miss
+# is a read that inferred the schema from the footers.
+SCHEMA_COUNTS = {"hits": 0, "misses": 0}
+
+
+def _infer(spark: SparkSession, path: str, name: str) -> DataFrame:
+    """Read ``path`` and infer its schema from the parquet footers."""
+    if name != "events":
+        return spark.read.parquet(path)
+    try:
+        return spark.read.parquet(path)
+    except Exception:
+        # NANOS corpus with the legacy flag off: enable and retry.
+        spark.conf.set(_NANOS_CONF, "true")
+        return spark.read.parquet(path)
+
+
 def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one corpus table. ``name`` must be in TABLES.
+
+    The first read of a table in a session infers its schema from the
+    parquet footers (a Spark job per call: ~100 ms warm at sf0.01 on 3
+    cores, against ~17 ms for a read with a given schema) and caches it
+    per (session applicationId, table path) together with the table's
+    ``corpus_fingerprint``. Later calls build a FRESH relation with
+    ``spark.read.schema(cached).parquet(path)`` — never a shared DataFrame
+    object, so two loads of one table keep distinct attribute ids and a
+    self-join ``a.join(b, a.x == b.x)`` stays unambiguous. A table
+    rewritten in place changes its fingerprint and is re-inferred; a
+    miss evicts other sessions' entries; a path that cannot be stat'ed is
+    inferred on every call.
 
     ``events.ts`` has shipped as both parquet TIMESTAMP(MICROS) and
     TIMESTAMP(NANOS) across corpus generations. Spark 4.x rejects NANOS
@@ -107,8 +169,8 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     and if the read fails on the nanos type, enable the conf for this
     session and retry; if ``ts`` then arrives as a long, rebuild a
     TimestampType column at µs precision — the same truncation DuckDB
-    applies, so oracle parity holds. All of this is schema-resolution-time
-    work plus (at most) one distributed projection; no driver roundtrip.
+    applies, so oracle parity holds. That decision is cached with the
+    schema; a read given the cached long ``ts`` field needs no conf.
 
     The conf is only turned on when the corpus actually needs it, so a
     µs-precision corpus never observes the legacy flag (a nanos source in
@@ -116,18 +178,27 @@ def load(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """
     if name not in TABLES:
         raise KeyError(f"unknown table {name!r}; expected one of {TABLES}")
-    if name == "events":
-        path = f"{sf_dir}/events.parquet"
-        try:
-            df = spark.read.parquet(path)
-        except Exception:
-            # NANOS corpus with the legacy flag off: enable and retry.
-            spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-            df = spark.read.parquet(path)
-        if isinstance(df.schema["ts"].dataType, LongType):
-            df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    path = f"{sf_dir}/{name}.parquet"
+    ck, fp = (session_key(spark), path), corpus_fingerprint(path)
+    with _SCHEMAS_LOCK:
+        entry = _SCHEMAS.get(ck)
+        hit = fp is not None and entry is not None and entry[0] == fp
+        SCHEMA_COUNTS["hits" if hit else "misses"] += 1
+    if hit:
+        _, schema, nanos = entry
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = _infer(spark, path, name)
+        schema = df.schema
+        nanos = name == "events" and isinstance(schema["ts"].dataType, LongType)
+        if fp is not None:
+            with _SCHEMAS_LOCK:
+                for stale in [k for k in _SCHEMAS if k[0] != ck[0]]:
+                    del _SCHEMAS[stale]
+                _SCHEMAS[ck] = (fp, schema, nanos)
+    if nanos:
+        df = df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
+    return df
 
 
 def load_parallel(
@@ -154,7 +225,9 @@ def load_parallel(
 
 
 def register_temp_views(spark: SparkSession, sf_dir: str) -> None:
-    """Expose all corpus tables as temp views for ``spark.sql`` entry points."""
+    """Expose all corpus tables as temp views for ``spark.sql`` entry
+    points. Each ``load`` here also fills the schema cache, so a service
+    that registers the views at start serves its first request warm."""
     for t in TABLES:
         load(spark, sf_dir, t).createOrReplaceTempView(t)
 

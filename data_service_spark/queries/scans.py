@@ -528,7 +528,7 @@ def a_scan_metadata(spark: SparkSession, sf_dir: str) -> DataFrame:
     lineage column a curation pipeline groups by to trace a bad batch back
     to its input file. At 100 TB, per-file row counts via `_metadata` are
     how you audit a load without a separate manifest."""
-    li = spark.read.parquet(f"{sf_dir}/lineitem.parquet")
+    li = load(spark, sf_dir, "lineitem")
     return (
         li.select(F.col("_metadata.file_name").alias("file_name"), "l_orderkey")
         .groupBy("file_name")

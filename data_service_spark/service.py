@@ -33,7 +33,7 @@ from typing import Any
 
 from pyspark.sql import DataFrame, SparkSession
 
-from data_service_spark.io import MEMOS, TABLES, register_temp_views
+from data_service_spark.io import MEMOS, SCHEMA_COUNTS, TABLES, register_temp_views
 
 MAX_ROWS = 10_000  # hard cap per request; pagination is the client's job
 
@@ -98,8 +98,9 @@ class SqlEngine:
         """Engine observability snapshot: the numbers an operator dashboard
         scrapes — engine version, parallelism, catalog/stream/registry
         sizes, the JVM's executor-side job counters from the status
-        tracker, and each session memo's hit/miss/build-second counters
-        (``io.MEMOS``). Cheap (driver-side metadata only, no jobs run)."""
+        tracker, each session memo's hit/miss/build-second counters
+        (``io.MEMOS``) and ``io.load``'s schema-cache hits and misses.
+        Cheap (driver-side metadata only, no jobs run)."""
         sc = self.spark.sparkContext
         tracker = sc.statusTracker()
         return {
@@ -118,6 +119,7 @@ class SqlEngine:
                 }
                 for m in MEMOS
             },
+            "schemas": dict(SCHEMA_COUNTS),
         }
 
     def streams(self) -> list[dict[str, Any]]:

@@ -55,3 +55,73 @@ def test_timing_modes_refuse_fewer_than_two_reps(argv, monkeypatch):
     monkeypatch.setattr(bench, "_ab", lambda *a: pytest.fail("worktree added"))
     with pytest.raises(SystemExit, match="2 or more"):
         bench.main(argv)
+
+
+class _Ctx:
+    applicationId = "app-bench"
+
+
+class _Session:
+    sparkContext = _Ctx()
+
+
+class _Frame:
+    def localCheckpoint(self):
+        return self
+
+
+def _bench_with_memos(monkeypatch, tmp_path):
+    """Patch bench.py onto two stub memos and one key that reads the first,
+    with no Spark session. Returns the event log: each memo build and each
+    run of the key, in order."""
+    import time
+
+    from data_service_spark import io
+
+    events: list[str] = []
+    monkeypatch.setattr(io, "MEMOS", [])
+
+    @io.corpus_memo
+    def read_memo(spark, sf_dir):
+        events.append("build read_memo")
+        time.sleep(0.01)
+        return _Frame()
+
+    @io.corpus_memo
+    def other_memo(spark, sf_dir):
+        events.append("build other_memo")
+        return _Frame()
+
+    def reader(spark, sf_dir):
+        events.append("run reader")
+        return read_memo(spark, sf_dir)
+
+    monkeypatch.setattr(bench, "QUERIES", {"reader": reader})
+    monkeypatch.setattr(bench, "_warm", lambda spark, sf_dir: None)
+    monkeypatch.setattr(bench, "_sink", lambda df: None)
+    monkeypatch.setattr(bench, "HERE", str(tmp_path))
+    return events, read_memo
+
+
+def test_subset_run_builds_only_the_memos_its_keys_read(monkeypatch, tmp_path, capsys):
+    import json
+
+    events, read_memo = _bench_with_memos(monkeypatch, tmp_path)
+    bench._full_run(_Session(), str(tmp_path / "sf0.01"), ["reader"])
+    assert events == ["run reader", "build read_memo", "run reader", "run reader"]
+    line = json.loads(capsys.readouterr().out)
+    assert line["memo_build_sec"] == round(read_memo.build_s, 3) > 0
+    assert not (tmp_path / "bench_full.json").exists()
+
+
+def test_full_run_warms_every_memo_first(monkeypatch, tmp_path, capsys):
+    import json
+
+    events, _ = _bench_with_memos(monkeypatch, tmp_path)
+    bench._full_run(_Session(), str(tmp_path / "sf0.01"), [])
+    assert events == ["build read_memo", "build other_memo"] + ["run reader"] * 3
+    with open(tmp_path / "bench_full.json") as fh:
+        full = json.load(fh)
+    assert set(full["memo_builds"]) == {"read_memo", "other_memo"}
+    assert full["memoized"] == ["reader"]
+    assert json.loads(capsys.readouterr().out)["memo_build_sec"] > 0

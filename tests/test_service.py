@@ -220,6 +220,13 @@ def test_metrics_endpoint(service):
     assert after["hits"] >= before["hits"] + 1
     assert after["hits"] + after["misses"] == before["hits"] + before["misses"] + 2
     assert after["build_s"] >= before["build_s"]
+    # Schema-cache counters: the engine's view registration resolved every
+    # table, so h_cond_funcs' io.load calls hit the cache.
+    before = call(service, "/metrics")["schemas"]
+    for _ in range(2):
+        call(service, "/query", {"key": "h_cond_funcs", "limit": 5})
+    after = call(service, "/metrics")["schemas"]
+    assert after["hits"] >= before["hits"] + 1
 
 
 def test_concurrent_sql_requests(service):
