@@ -71,8 +71,10 @@ def a_scan_filter_pushdown(spark: SparkSession, sf_dir: str) -> DataFrame:
 @register("a_sink_parquet_roundtrip", oracle="SELECT * FROM region")
 def a_sink_parquet_roundtrip(spark: SparkSession, sf_dir: str) -> DataFrame:
     path = _tmpdir("region_parquet")
-    load(spark, sf_dir, "region").write.mode("overwrite").parquet(path)
-    return spark.read.parquet(path)
+    region = load(spark, sf_dir, "region")
+    region.write.mode("overwrite").parquet(path)
+    # Read back with the schema just written: no footer-inference job.
+    return spark.read.schema(region.schema).parquet(path)
 
 
 @register(
@@ -430,7 +432,7 @@ def a_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     frag = _tmpdir(f"docs_frag_{os.getpid()}")
     compact = _tmpdir(f"docs_compact_{os.getpid()}")
     src.repartition(64).write.mode("overwrite").parquet(frag)
-    fragged = spark.read.parquet(frag)
+    fragged = spark.read.schema(src.schema).parquet(frag)
     total_bytes = sum(
         os.path.getsize(os.path.join(frag, f))
         for f in os.listdir(frag)
@@ -438,7 +440,7 @@ def a_sink_compact(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     n_files = max(1, total_bytes // (128 << 20))
     fragged.coalesce(int(n_files)).write.mode("overwrite").parquet(compact)
-    return spark.read.parquet(compact)
+    return spark.read.schema(src.schema).parquet(compact)
 
 
 @register(
@@ -695,7 +697,8 @@ def a_sink_sorted_layout(spark: SparkSession, sf_dir: str) -> DataFrame:
         .parquet(path)
     )
     per_file = (
-        spark.read.parquet(path)
+        spark.read.schema(li.schema)
+        .parquet(path)
         .select("l_shipdate", F.col("_metadata.file_name").alias("f"))
         .groupBy("f")
         .agg(
@@ -918,15 +921,14 @@ def a_sink_zorder(spark: SparkSession, sf_dir: str) -> DataFrame:
         ).cast("long").alias("month_bucket"),
     )
     z = _zvalue(F.col("cust_bucket"), F.col("month_bucket"))
-    (
+    clustered = (
         o.withColumn("zval", z)
         .repartitionByRange(8, "zval")
         .sortWithinPartitions("zval")
         .drop("zval")
-        .write.mode("overwrite")
-        .parquet(path)
     )
-    return spark.read.parquet(path)
+    clustered.write.mode("overwrite").parquet(path)
+    return spark.read.schema(clustered.schema).parquet(path)
 
 
 @register(
@@ -1061,7 +1063,7 @@ def a_sink_parquet_codecs(spark: SparkSession, sf_dir: str) -> DataFrame:
         assert any(
             marker in f for f in os.listdir(path) if f.endswith(".parquet")
         ), f"{codec} codec not reflected in file names"
-        back = spark.read.parquet(path)
+        back = spark.read.schema(nation.schema).parquet(path)
         out.append(
             back.agg(
                 F.count(F.lit(1)).alias("n_rows"),

@@ -20,20 +20,54 @@ Source registration mirrors the reference's multi-source model: any
 DataSource V2 format (parquet/csv/json/orc/jdbc/kafka) declared as a dict
 config becomes a temp view. Connector recipes that need external services
 (JDBC/Kafka/Hive) are config-only here — see ``sources.py``.
+
+Held plans. ``/query`` keeps the DataFrame a registry key's builder
+returned, per engine (so per session) and per ``io.corpus_fingerprint`` of
+the corpus dir, and answers a repeated request with
+``held.limit(n).collect()``: no builder call, no ``io.load``, no Python
+``Column`` construction. A built frame is held only when the build itself
+shows that it is a pure function of the corpus: the key is not in
+``registry.EFFECTFUL``; the build started no Spark job, counted under a
+job tag local to the request's thread (every write is a job, so every sink
+is excluded, and a memo reader is held only from the build after the one
+that filled its memo); and every file in its ``inputFiles()`` lies under
+the corpus dir (a builder that writes a file from Python and reads it back
+is excluded). Nothing is configured or listed by hand, and a corpus that
+cannot be fingerprinted holds nothing. A new fingerprint rebuilds the
+entry and drops every entry of the old one, and the memos rebuild on the
+same fingerprint, so a held plan never reads a stale checkpoint. No result is cached: ``.limit`` makes a new Dataset with its
+own QueryExecution, so every request is optimized, planned and executed
+afresh. The held Dataset itself is never collected, because its executed
+plan would keep materialized AQE stages and broadcast results.
+
+The ``/sql`` views are registered at start with the corpus fingerprint of
+that moment; a request that sees a different fingerprint re-registers them
+first, because a temp view keeps the file listing it resolved and would
+read a table rewritten in place as stale or empty.
 """
 
 from __future__ import annotations
 
 import json
+import os
 import threading
+import uuid
 from datetime import date, datetime
 from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
+from urllib.parse import unquote, urlparse
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, SparkSession
 
-from data_service_spark.io import MEMOS, SCHEMA_COUNTS, TABLES, register_temp_views
+from data_service_spark.io import (
+    MEMOS,
+    SCHEMA_COUNTS,
+    TABLES,
+    corpus_fingerprint,
+    register_temp_views,
+)
 
 MAX_ROWS = 10_000  # hard cap per request; pagination is the client's job
 
@@ -64,8 +98,29 @@ class SqlEngine:
         self.spark = spark
         self.sf_dir = sf_dir
         self._streams: dict[str, Any] = {}
+        # key -> (corpus fingerprint, built frame): see run_query.
+        self._plans: dict[str, tuple[object, DataFrame]] = {}
+        self._plan_counts = {"hits": 0, "builds": 0}
+        self._plans_lock = threading.Lock()
+        self._views_lock = threading.Lock()
+        self._views_fp = None
         if sf_dir is not None:
+            self._views_fp = corpus_fingerprint(sf_dir)
             register_temp_views(spark, sf_dir)
+
+    def _refresh_views(self) -> None:
+        """Re-register the corpus views when the corpus fingerprint moved
+        since they were registered: a temp view keeps the file listing it
+        resolved, so a table rewritten in place would read stale rows."""
+        if self.sf_dir is None:
+            return
+        fp = corpus_fingerprint(self.sf_dir)
+        if fp == self._views_fp:
+            return
+        with self._views_lock:
+            if fp != self._views_fp:
+                register_temp_views(self.spark, self.sf_dir)
+                self._views_fp = fp
 
     # ------------------------------------------------ streaming lifecycle --
 
@@ -99,8 +154,10 @@ class SqlEngine:
         scrapes — engine version, parallelism, catalog/stream/registry
         sizes, the JVM's executor-side job counters from the status
         tracker, each session memo's hit/miss/build-second counters
-        (``io.MEMOS``) and ``io.load``'s schema-cache hits and misses.
-        Cheap (driver-side metadata only, no jobs run)."""
+        (``io.MEMOS``), ``io.load``'s schema-cache hits and misses, and
+        the held ``/query`` plans: how many are held, how many requests
+        a held plan answered (``hits``) and how many called the builder
+        (``builds``). Cheap (driver-side metadata only, no jobs run)."""
         sc = self.spark.sparkContext
         tracker = sc.statusTracker()
         return {
@@ -120,6 +177,7 @@ class SqlEngine:
                 for m in MEMOS
             },
             "schemas": dict(SCHEMA_COUNTS),
+            "plans": {"held": len(self._plans), **self._plan_counts},
         }
 
     def streams(self) -> list[dict[str, Any]]:
@@ -169,7 +227,9 @@ class SqlEngine:
     def run_query(self, key: str, limit: int = 1000) -> dict[str, Any]:
         """Execute a registered operator (SURVEY.md §2 key) against the
         service's corpus dir — the named-pipeline counterpart of raw /sql,
-        so clients get every curated operator without shipping SQL."""
+        so clients get every curated operator without shipping SQL.
+        A held key runs ``held.limit(limit)`` with no builder call (see
+        "Held plans" in the module docstring)."""
         from data_service_spark.registry import QUERIES, load_all
 
         load_all()
@@ -178,7 +238,7 @@ class SqlEngine:
         if key not in QUERIES:
             raise KeyError(key)
         limit = max(1, min(int(limit), MAX_ROWS))
-        df = QUERIES[key](self.spark, self.sf_dir).limit(limit)
+        df = self._plan(key).limit(limit)
         rows = df.collect()
         return {
             "key": key,
@@ -187,6 +247,64 @@ class SqlEngine:
             "row_count": len(rows),
             "truncated_at": limit,
         }
+
+    def _plan(self, key: str) -> DataFrame:
+        """The held frame of ``key`` at the current corpus fingerprint, else
+        a fresh build, held by the rule of the module docstring."""
+        from data_service_spark.registry import EFFECTFUL, QUERIES
+
+        fp = corpus_fingerprint(self.sf_dir)
+        with self._plans_lock:
+            held = self._plans.get(key)
+            if held is not None and held[0] == fp:
+                self._plan_counts["hits"] += 1
+                return held[1]
+            self._plan_counts["builds"] += 1
+            # Entries of an older corpus would pin its checkpoints.
+            self._plans = {k: v for k, v in self._plans.items() if v[0] == fp}
+        sc = self.spark.sparkContext
+        tag = f"dss-build-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            df = QUERIES[key](self.spark, self.sf_dir)
+        finally:
+            sc.removeJobTag(tag)
+        hold = (
+            fp is not None
+            and key not in EFFECTFUL
+            and not self._started_jobs(tag)
+            and self._reads_only_corpus(df)
+        )
+        with self._plans_lock:
+            if hold:
+                self._plans[key] = (fp, df)
+            else:
+                self._plans.pop(key, None)
+        return df
+
+    def _started_jobs(self, tag: str) -> bool:
+        """Did any job carry ``tag``? The status store is filled from the
+        listener bus, so drain it first; a drain that times out counts as
+        a job (the frame is then rebuilt next time, never served stale)."""
+        jsc = self.spark.sparkContext._jsc.sc()
+        try:
+            jsc.listenerBus().waitUntilEmpty()
+        except Py4JJavaError:
+            return True
+        return len(jsc.statusTracker().getJobIdsForTag(tag)) > 0
+
+    def _reads_only_corpus(self, df: DataFrame) -> bool:
+        """Every ``inputFiles()`` entry (``file://`` URIs) is a path under
+        the corpus dir."""
+        root = os.path.realpath(self.sf_dir)
+        for uri in df.inputFiles():
+            u = urlparse(uri)
+            if u.scheme != "file":
+                return False
+            path = os.path.realpath(unquote(u.path))
+            if os.path.commonpath([root, path]) != root:
+                return False
+        return True
 
     def explain(self, sql_text: str) -> dict[str, Any]:
         """Formatted physical plan without executing — the ops surface for
@@ -279,6 +397,7 @@ class SqlEngine:
         limit = max(1, min(int(limit), MAX_ROWS))
         if args is not None and not isinstance(args, dict):
             raise ValueError("args must be an object of name → value")
+        self._refresh_views()
         df = self.spark.sql(sql_text, args=args) if args else self.spark.sql(sql_text)
         df = df.limit(limit)
         rows = df.collect()

@@ -3,11 +3,19 @@
 from __future__ import annotations
 
 import json
+import os
+import shutil
+import sys
+import threading
 import urllib.error
 import urllib.request
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 import pytest
 
+from data_service_spark.io import TABLES, register_temp_views
+from data_service_spark.queries.scans import _tmpdir
 from data_service_spark.service import SqlEngine, SqlService
 from data_service_spark.sources import build_reader, jdbc_config, kafka_config
 
@@ -211,14 +219,18 @@ def test_metrics_endpoint(service):
     assert body["n_query_keys"] >= 343
     assert body["n_tables"] >= 10
     assert isinstance(body["active_job_ids"], list)
-    # Memo counters: k_cluster_assign is itself a session memo, so two
-    # /query calls of it are at least one hit (the first may build it).
-    before = body["memos"]["k_cluster_assign"]
+    # Memo counters: k_cluster_assign is itself a session memo. Each of
+    # two /query calls of it either calls the memo or is answered by the
+    # held plan, which calls no builder.
+    before, plans = body["memos"]["k_cluster_assign"], body["plans"]
     for _ in range(2):
         call(service, "/query", {"key": "k_cluster_assign", "limit": 5})
-    after = call(service, "/metrics")["memos"]["k_cluster_assign"]
+    body = call(service, "/metrics")
+    after = body["memos"]["k_cluster_assign"]
+    memo_calls = after["hits"] + after["misses"] - before["hits"] - before["misses"]
     assert after["hits"] >= before["hits"] + 1
-    assert after["hits"] + after["misses"] == before["hits"] + before["misses"] + 2
+    assert memo_calls >= 1
+    assert memo_calls + body["plans"]["hits"] - plans["hits"] == 2
     assert after["build_s"] >= before["build_s"]
     # Schema-cache counters: the engine's view registration resolved every
     # table, so h_cond_funcs' io.load calls hit the cache.
@@ -331,3 +343,129 @@ def test_concurrent_effectful_query_requests(service):
     assert results["q_ctas_insert-0"]["row_count"] == 5
     assert results["a_sink_table-1"]["row_count"] == 25
     assert results["q_ctas_insert-2"]["row_count"] == 5
+
+
+@pytest.fixture
+def corpus_copy(spark, sf_dir, tmp_path):
+    """A copy of the corpus that a test may rewrite. An engine over it
+    registers the session's temp views there, so they are pointed back at
+    the shared corpus afterwards."""
+    for t in TABLES:
+        shutil.copyfile(os.path.join(sf_dir, f"{t}.parquet"), tmp_path / f"{t}.parquet")
+    yield tmp_path
+    register_temp_views(spark, sf_dir)
+
+
+def test_repeated_query_is_answered_by_the_held_plan(service):
+    """A key whose build starts no job is held: the second request calls
+    no builder and returns the same body."""
+    key = {"key": "d_agg_collect", "limit": 50}
+    before = call(service, "/metrics")["plans"]
+    first = call(service, "/query", key)
+    mid = call(service, "/metrics")["plans"]
+    second = call(service, "/query", key)
+    after = call(service, "/metrics")["plans"]
+    assert mid["builds"] == before["builds"] + 1 and mid["hits"] == before["hits"]
+    assert after["hits"] == mid["hits"] + 1 and after["builds"] == mid["builds"]
+    assert after["held"] >= 1
+    assert second == first
+
+
+def test_memo_reader_is_held_from_its_second_call(spark, corpus_copy):
+    """On a fresh corpus dir the first build of a memo reader builds the
+    memo (Spark jobs), so it is not held; the second build starts no job
+    and is held; the third request is answered by the held plan."""
+    engine = SqlEngine(spark, str(corpus_copy))
+    outs, counts = [], []
+    for _ in range(3):
+        outs.append(engine.run_query("k_fdr_by", 100))
+        counts.append(engine.metrics()["plans"])
+    assert counts == [
+        {"held": 0, "hits": 0, "builds": 1},
+        {"held": 1, "hits": 0, "builds": 2},
+        {"held": 1, "hits": 1, "builds": 2},
+    ]
+    assert outs[0] == outs[1] == outs[2]
+
+
+def test_sinks_and_python_written_inputs_are_never_held(spark, sf_dir):
+    """A catalog writer, a parquet sink, a JDBC sink that reads back over
+    JDBC (no input files) and a builder that writes its input file from
+    Python run their builder on every request: the sink dir and the CSV
+    file are rewritten each time."""
+    engine = SqlEngine(spark, sf_dir)
+    written = {
+        "a_sink_table": None,
+        "a_source_jdbc": None,
+        "a_sink_parquet_roundtrip": _tmpdir("region_parquet"),
+        "a_source_csv_malformed": os.path.join(
+            _tmpdir(f"csv_malformed_{os.getpid()}"), "rows.csv"
+        ),
+    }
+    for key, path in written.items():
+        mtimes = []
+        for _ in range(2):
+            assert engine.run_query(key, 50)["row_count"] > 0
+            if path is not None:
+                mtimes.append(os.stat(path).st_mtime_ns)
+        assert path is None or mtimes[0] != mtimes[1], key
+    assert engine.metrics()["plans"] == {"held": 0, "hits": 0, "builds": 8}
+
+
+def test_concurrent_requests_of_one_held_key(service):
+    """8 threads on one held key, under a short switch interval, all get
+    the rows the building request got."""
+    key = {"key": "g_union_byname", "limit": 100}
+    expected = call(service, "/query", key)
+    call(service, "/query", key)
+    hits = call(service, "/metrics")["plans"]["hits"]
+    results: list[object] = []
+
+    def run() -> None:
+        try:
+            results.append(call(service, "/query", key))
+        except Exception as exc:  # noqa: BLE001 — asserted below
+            results.append(exc)
+
+    interval = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [threading.Thread(target=run) for _ in range(8)]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(interval)
+    assert not any(t.is_alive() for t in threads)
+    assert results == [expected] * 8
+    assert call(service, "/metrics")["plans"]["hits"] == hits + 8
+
+
+def test_in_place_rewrite_reaches_sql_views_and_held_plans(spark, corpus_copy):
+    """``region`` rewritten in place with 500 more rows under the same path:
+    ``/sql`` (views registered at engine start) and a held ``/query`` plan
+    over ``region`` both return the new rows, and the plans held for the
+    old corpus are dropped. A relation that kept the old file listing
+    reads the grown file short (0 rows for the view)."""
+    engine = SqlEngine(spark, str(corpus_copy))
+    count = "SELECT count(*) AS n FROM region"
+    assert engine.sql(count)["rows"] == [[5]]
+    for _ in range(2):
+        before = engine.run_query("g_union_byname", 10_000)
+        engine.run_query("d_agg_collect", 10)
+    assert engine.metrics()["plans"]["held"] == 2
+    path = corpus_copy / "region.parquet"
+    region = pq.read_table(path)
+    extra = pa.table({
+        "r_regionkey": pa.array(range(5, 505), region.schema.field("r_regionkey").type),
+        "r_name": pa.array([f"NEW{k}" for k in range(500)]),
+    })
+    path.unlink()
+    pq.write_table(pa.concat_tables([region, extra]), path)
+    assert engine.sql(count)["rows"] == [[505]]
+    after = engine.run_query("g_union_byname", 10_000)
+    assert after["row_count"] == before["row_count"] + 500
+    assert {f"NEW{k}" for k in range(500)} <= {row[1] for row in after["rows"]}
+    # The rebuild dropped d_agg_collect's plan of the old corpus.
+    assert engine.metrics()["plans"]["held"] == 1
